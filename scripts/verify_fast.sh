@@ -9,18 +9,25 @@
 #   scripts/verify_fast.sh            # all test files
 #   scripts/verify_fast.sh tests/test_bpe.py tests/test_plans.py
 #
-# Tuning (env):
-#   VERIFY_JOBS       parallel workers            (default 8)
-#   VERIFY_SPARK_CPUS local[N] cores per worker   (default 8; 2x
-#                     oversubscribed on 32 cores — Spark local tests are
-#                     mostly stage-latency-bound, not core-bound)
-#   VERIFY_SPARK_MEM  driver memory per worker    (default 10g)
+# Tuning (env; defaults are derived from the host's cores and RAM):
+#   VERIFY_JOBS       parallel workers            (default: one per 4 cores
+#                     and per 4 GB of RAM, 1 to 8 — 8 on a 32-core host)
+#   VERIFY_SPARK_CPUS local[N] cores per worker   (default: the host's cores
+#                     2x oversubscribed across the workers — Spark local
+#                     tests are mostly stage-latency-bound, not core-bound)
+#   VERIFY_SPARK_MEM  driver memory per worker    (default: half of RAM
+#                     split across the workers, 1g to 10g)
 set -u
 cd "$(dirname "$0")/.."
 
-JOBS="${VERIFY_JOBS:-8}"
-CPUS="${VERIFY_SPARK_CPUS:-8}"
-MEM="${VERIFY_SPARK_MEM:-10g}"
+HOST_CPUS="$(nproc)"
+HOST_MEM_GB="$(awk '/^MemTotal:/ {print int($2 / 1048576)}' /proc/meminfo)"
+clamp() { local v="$1"; [ "$v" -lt "$2" ] && v="$2"; [ "$v" -gt "$3" ] && v="$3"; echo "$v"; }
+by_cpu=$((HOST_CPUS / 4)); by_mem=$((HOST_MEM_GB / 4))
+JOBS="${VERIFY_JOBS:-$(clamp "$((by_cpu < by_mem ? by_cpu : by_mem))" 1 8)}"
+CPUS="${VERIFY_SPARK_CPUS:-$(clamp "$((2 * HOST_CPUS / JOBS))" 2 "$((2 * HOST_CPUS))")}"
+MEM="${VERIFY_SPARK_MEM:-$(clamp "$((HOST_MEM_GB / (2 * JOBS)))" 1 10)g}"
+echo "verify-fast: $JOBS workers x local[$CPUS], ${MEM} driver each ($HOST_CPUS cores, ${HOST_MEM_GB} GB host)"
 LOGDIR="$(mktemp -d /tmp/verify_fast.XXXXXX)"
 export LOGDIR CPUS MEM
 

@@ -48,6 +48,11 @@ class EngineConfig:
     rollup_window: str = "1 hour"
 
     def __post_init__(self) -> None:
+        # a zero-row frame is no window at all: the streaming volatility
+        # window would grow without bound and diverge from the batch plan
+        for name in ("sma_fast_window", "sma_slow_window", "volatility_window"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be at least 1")
         if self.sma_fast_window >= self.sma_slow_window:
             raise ValueError("sma_fast_window must be smaller than sma_slow_window")
 

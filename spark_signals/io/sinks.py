@@ -15,9 +15,11 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from spark_signals.pipeline.builder import PipelineOutputs, persist_for_fanout
 
@@ -32,39 +34,73 @@ SINK_TIME_COLUMNS = {
 }
 
 
+def _write_sink(
+    name: str,
+    df: DataFrame,
+    path: str,
+    jdbc_url: str | None,
+    jdbc_batchsize: int,
+) -> None:
+    out = df.withColumn("event_date", F.to_date(F.col(SINK_TIME_COLUMNS[name])))
+    out.write.mode("overwrite").partitionBy("event_date").parquet(path)
+    if jdbc_url is not None:
+        # buffered JDBC append (S5-S7): batchsize = the reference's
+        # sink.buffer-flush.max-rows. Exercised end-to-end against
+        # an embedded Derby database (bundled with Spark) in
+        # tests/test_jdbc_sink.py; a Postgres URL drops in unchanged.
+        df.write.format("jdbc").option("url", jdbc_url).option(
+            "dbtable", name
+        ).option("batchsize", jdbc_batchsize).mode("append").save()
+
+
 def write_sinks(
     outputs: PipelineOutputs,
     root: str,
     jdbc_url: str | None = None,
     jdbc_batchsize: int = 200,
 ) -> dict[str, str]:
-    """Batch multi-sink fan-out with shared-prefix reuse.
+    """Batch multi-sink fan-out: one shared relation, concurrent writes.
 
-    persist_for_fanout pins positions_costs so the five sink writes compute
-    the window stages once (the reference StatementSet merge, SURVEY.md §4).
+    persist_for_fanout pins ``outputs.shared``, the one relation every sink
+    projects or aggregates, so the window stage runs once per pass (the
+    reference StatementSet merge, SURVEY.md §4). The six sink writes are
+    small jobs whose fixed scheduling cost dominates, so they are submitted
+    at once from a pool with one thread per sink; the scheduler interleaves
+    their stages on the shared executors. Each thread inherits the caller's
+    job group and local properties. A sink's JDBC append follows its own
+    parquet write. Every write is awaited before the shared relation is
+    unpersisted; then the first failure (in sink order) is re-raised, with
+    any further failures attached as notes.
+
     Each table is written date-partitioned; at 100 TB this is what makes
     retention (partition delete) and time-ranged reads (partition pruning)
     O(touched days), not O(history).
     """
+    sinks = outputs.sinks()
+    paths = {name: os.path.join(root, name) for name in sinks}
+    spark = outputs.shared.sparkSession
     persist_for_fanout(outputs)
-    paths: dict[str, str] = {}
     try:
-        for name, df in outputs.sinks().items():
-            tcol = SINK_TIME_COLUMNS[name]
-            out = df.withColumn("event_date", F.to_date(F.col(tcol)))
-            path = os.path.join(root, name)
-            out.write.mode("overwrite").partitionBy("event_date").parquet(path)
-            paths[name] = path
-            if jdbc_url is not None:
-                # buffered JDBC append (S5-S7): batchsize = the reference's
-                # sink.buffer-flush.max-rows. Exercised end-to-end against
-                # an embedded Derby database (bundled with Spark) in
-                # tests/test_jdbc_sink.py; a Postgres URL drops in unchanged.
-                df.write.format("jdbc").option("url", jdbc_url).option(
-                    "dbtable", name
-                ).option("batchsize", jdbc_batchsize).mode("append").save()
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            # one wrap per sink: each clones the caller's local properties,
+            # so the threads' SQL execution ids never share a Properties
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(spark)(_write_sink),
+                    name, df, paths[name], jdbc_url, jdbc_batchsize,
+                )
+                for name, df in sinks.items()
+            ]
+        # leaving the pool's block waited for every write
+        failures = [(name, f.exception()) for name, f in zip(sinks, futures)]
     finally:
-        outputs.positions_costs.unpersist()
+        outputs.shared.unpersist()
+    errors = [(name, err) for name, err in failures if err is not None]
+    if errors:
+        first = errors[0][1]
+        for name, err in errors[1:]:
+            first.add_note(f"sink {name} also failed: {err!r}")
+        raise first
     return paths
 
 

@@ -101,13 +101,16 @@ _PARQUET_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
 def _schema_cache_key(path: str) -> tuple[str, int, int]:
     import os
 
+    # never cache (the sentinel key can't match any stored entry):
+    # a directory table's own mtime/size does not change when a data file
+    # inside it is rewritten, and a remote path has no stat target at all
+    if os.path.isdir(path):
+        return (path, -1, -1)
     try:
         st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
     except OSError:
-        # directory-style or remote parquet path: no single stat target —
-        # never cache (key can't match any stored entry)
         return (path, -1, -1)
+    return (path, st.st_mtime_ns, st.st_size)
 
 
 def _read_fixed_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -8,9 +8,13 @@ may come from ``spark.read`` (backtest/correctness) or ``spark.readStream``
 spark_signals.streaming.
 
 Multi-sink plan reuse (SURVEY.md §4): the reference's StatementSet merges its
-5 INSERTs into one job sharing the upstream subgraph. Spark re-plans per
-action, so ``persist_for_fanout`` pins the shared prefix (positions_costs)
-before fanning out to multiple writes.
+INSERTs into one job sharing the upstream subgraph. Here every sink is a
+projection or aggregate of ONE shared relation (``PipelineOutputs.shared``:
+the forward-filled positions chain over a base that carries every column a
+sink needs, normalized prices and the strategy's signal inputs included).
+Spark re-plans per action, so ``persist_for_fanout`` pins that relation and
+the six sink writes each read it from memory — the scan, shuffle, sort and
+window stage run once per pass.
 """
 
 from __future__ import annotations
@@ -27,9 +31,16 @@ from spark_signals.pipeline import rollup as R
 from spark_signals.pipeline import normalize as N
 from spark_signals.pipeline import sma_cross as S
 
+#: The prices_normalized sink's columns, projected from the shared relation.
+NORMALIZED_COLUMNS = (
+    "product_id", "event_time", "sequence", "mid_price",
+    "best_bid", "best_ask", "returns", "volatility",
+)
+
 
 @dataclass
 class PipelineOutputs:
+    shared: DataFrame
     normalized_prices: DataFrame
     crossover_signals: DataFrame
     signals_decisions: DataFrame
@@ -55,20 +66,27 @@ class PipelineOutputs:
         }
 
 
-def assemble_outputs(
-    norm: DataFrame, signals: DataFrame, base: DataFrame, cfg: EngineConfig
-) -> PipelineOutputs:
-    """Shared downstream machinery: forward-fill → cost model → executions/
-    transitions → tumbling metrics → rollup.
+def shared_positions(base: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """positions_base-shaped ``base`` (normalized columns + sparse
+    ``signal_position`` + any strategy columns) → the fan-out's shared
+    relation: forward-filled position, its lag and the cost ratios, with
+    every base column carried through."""
+    return P.positions_enriched(P.positions_stream(base, cfg), cfg)
 
-    ``base`` is a positions_base-shaped DataFrame (normalized columns +
-    sparse ``signal_position``); ``signals`` the strategy's signal stream
-    (crossover_signals schema). Custom strategies (e.g. the pandas-UDF EWMA
-    strategy) supply their own signal stage and reuse everything below it.
+
+def assemble_outputs(
+    shared: DataFrame, signals: DataFrame, cfg: EngineConfig
+) -> PipelineOutputs:
+    """Shared downstream machinery: normalized projection, cost model →
+    executions/transitions → tumbling metrics → rollup.
+
+    ``shared`` is a :func:`shared_positions` relation and ``signals`` the
+    strategy's signal stream (crossover_signals schema) projected from it,
+    so every output derives from ``shared`` alone. Custom strategies (e.g.
+    the pandas-UDF EWMA strategy) supply their own base and signal
+    projection and reuse everything below it.
     """
-    stream = P.positions_stream(base, cfg)
-    enriched_pos = P.positions_enriched(stream, cfg)
-    costs = P.positions_costs(enriched_pos, cfg)
+    costs = P.positions_costs(shared, cfg)
 
     execs = P.executions(costs, cfg)
     transitions = P.position_transitions(costs, cfg)
@@ -80,7 +98,8 @@ def assemble_outputs(
     roll = R.hourly_rollup(metr, cfg)
 
     return PipelineOutputs(
-        normalized_prices=norm,
+        shared=shared,
+        normalized_prices=shared.select(*NORMALIZED_COLUMNS),
         crossover_signals=signals,
         signals_decisions=S.signals_decisions(signals),
         positions_costs=costs,
@@ -96,24 +115,22 @@ def assemble_outputs(
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig | None = None) -> PipelineOutputs:
     cfg = cfg or EngineConfig()
-    # one shared window stage; every downstream branch is a projection off it
-    # (forks reuse the exchange instead of recomputing the scan+sort)
-    enriched = N.enriched_ticks(ticks, cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
-    signals = S.crossover_signals_enriched(enriched, cfg)
-    base = P.positions_base_inline(enriched, cfg)
-    return assemble_outputs(norm, signals, base, cfg)
+    # one shared window stage; the positions chain stacks on the same
+    # partition+sort and carries the crossover inputs, so the signal stream
+    # is a projection of the shared relation too (J2's signal_counts reads
+    # it instead of a second scan)
+    base = P.positions_base_inline(N.enriched_ticks(ticks, cfg), cfg)
+    shared = shared_positions(base, cfg)
+    return assemble_outputs(shared, S.crossover_signals_enriched(shared, cfg), cfg)
 
 
 def persist_for_fanout(outputs: PipelineOutputs) -> PipelineOutputs:
-    """Pin the shared subplan before multi-sink fan-out (batch mode).
+    """Pin the shared relation before multi-sink fan-out (batch mode).
 
-    positions_costs is the widest shared prefix: executions, transitions,
-    and all metrics derive from it. Persisting it makes the 5-sink fan-out
-    compute the window stages once, like the reference's single merged job.
+    Every sink is a projection or aggregate of ``outputs.shared``, so with
+    it persisted each sink write reads the cached relation instead of
+    re-running the scan and window stage — the reference's single merged
+    job. The caller unpersists it once the writes are done.
     """
-    outputs.positions_costs.persist(StorageLevel.MEMORY_AND_DISK)
+    outputs.shared.persist(StorageLevel.MEMORY_AND_DISK)
     return outputs

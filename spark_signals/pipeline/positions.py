@@ -38,7 +38,9 @@ def positions_base_inline(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
 
     Semantically equals the reference's J1 left join of sparse (non-HOLD)
     signals (sma_cross.py:186-208) but reuses the shared window stage — no
-    join, no second shuffle.
+    join, no second shuffle. The crossover inputs (both SMAs and the raw and
+    lagged spread) ride along, so the positions chain over this base is the
+    one relation every sink — signals included — projects from.
     """
     from spark_signals.pipeline.sma_cross import SPREAD_DECISION_DP
     from spark_signals.rounding import sround_sql
@@ -66,6 +68,10 @@ def positions_base_inline(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
         f"CASE WHEN (({spread_r}) > 0) AND (({prev_r}) <= 0) THEN 1.0D"
         f" WHEN (({spread_r}) < 0) AND (({prev_r}) >= 0) THEN -1.0D"
         " END AS signal_position",
+        "fast_sma",
+        "slow_sma",
+        "sig_spread",
+        "prev_sig_spread",
     )
 
 
@@ -123,9 +129,11 @@ def positions_stream(
     """W6 — ignore-nulls last_value forward-fill, seeded flat
     (reference: sma_cross.py:211-233).
 
-    ``keep_signal_marker=True`` retains the sparse pre-fill signal column as
-    :data:`SIGNAL_MARKER` for single-pass metric chains; the default drops
-    it so sink-facing relations keep the reference schema."""
+    The sparse pre-fill ``signal_position`` column is carried through (the
+    fan-out's shared relation projects signals from it; sink relations
+    select explicit columns). ``keep_signal_marker=True`` renames it to
+    :data:`SIGNAL_MARKER` for single-pass metric chains, whose cost and
+    return projections forward the marker to the fused A1+A2 aggregate."""
     from spark_signals.pipeline.normalize import TICK_OVER
 
     position = (
@@ -136,13 +144,12 @@ def positions_stream(
     # one projection (same column order as the former withColumn +
     # rename/drop pair — position appended last): each extra DataFrame op
     # re-analyzes the whole deep chain on the driver
-    if keep_signal_marker:
-        cols = [
-            f"signal_position AS {SIGNAL_MARKER}" if c == "signal_position" else c
-            for c in base.columns
-        ]
-    else:
-        cols = [c for c in base.columns if c != "signal_position"]
+    cols = [
+        f"signal_position AS {SIGNAL_MARKER}"
+        if keep_signal_marker and c == "signal_position"
+        else c
+        for c in base.columns
+    ]
     return base.selectExpr(*cols, position)
 
 

@@ -26,7 +26,11 @@ from pyspark.sql import functions as F
 
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline import normalize as N
-from spark_signals.pipeline.builder import PipelineOutputs, assemble_outputs
+from spark_signals.pipeline.builder import (
+    PipelineOutputs,
+    assemble_outputs,
+    shared_positions,
+)
 
 K_BANDS = 2.0
 
@@ -73,21 +77,21 @@ def band_signals(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
     enriched = band_signals(N.enriched_ticks(ticks, cfg), cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
     quote_spread = F.when(
         F.col("best_bid").isNotNull() & F.col("best_ask").isNotNull(),
         F.col("best_ask") - F.col("best_bid"),
     )
+    # the base carries the band columns the signal stream needs, so the
+    # signals project from the shared relation like every other sink
     base = enriched.select(
         "product_id", "event_time", "sequence", "mid_price", "returns",
         "volatility", "best_bid", "best_ask",
         quote_spread.alias("spread"),
         "signal_position",
+        "bk_upper", "bk_lower", "bk_confidence",
     )
-    signals = enriched.select(
+    shared = shared_positions(base, cfg)
+    signals = shared.select(
         F.lit(cfg.strategy_run_id).alias("strategy_run_id"),
         F.col("product_id").alias("instrument_id"),
         "sequence",
@@ -107,4 +111,4 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
             )
         ).alias("metadata"),
     )
-    return assemble_outputs(norm, signals, base, cfg)
+    return assemble_outputs(shared, signals, cfg)

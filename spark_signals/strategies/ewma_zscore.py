@@ -34,7 +34,11 @@ from pyspark.sql import types as T
 
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline import normalize as N
-from spark_signals.pipeline.builder import PipelineOutputs, assemble_outputs
+from spark_signals.pipeline.builder import (
+    PipelineOutputs,
+    assemble_outputs,
+    shared_positions,
+)
 
 ALPHA = 0.1
 Z_ENTER = 2.0
@@ -153,10 +157,6 @@ WHERE signal_position IS NOT NULL"""
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
     enriched = N.enriched_ticks(ticks, cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
     sig = (
         enriched.select("product_id", "event_time", "sequence", "mid_price")
         .groupBy("product_id")
@@ -166,15 +166,18 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
         F.col("best_bid").isNotNull() & F.col("best_ask").isNotNull(),
         F.col("best_ask") - F.col("best_bid"),
     )
-    base = norm.join(sig.select("product_id", "sequence", "zscore", "signal_position"),
-                     ["product_id", "sequence"], "left").select(
+    base = enriched.join(sig.select("product_id", "sequence", "zscore", "signal_position"),
+                         ["product_id", "sequence"], "left").select(
         "product_id", "event_time", "sequence", "mid_price", "returns",
         "volatility", "best_bid", "best_ask",
         quote_spread.alias("spread"),
         "signal_position",
         "zscore",
     )
-    signals = base.select(
+    # the widest shared relation: the positions chain over the joined base,
+    # which still carries zscore for the signal stream
+    shared = shared_positions(base, cfg)
+    signals = shared.select(
         F.lit(cfg.strategy_run_id).alias("strategy_run_id"),
         F.col("product_id").alias("instrument_id"),
         "sequence",
@@ -193,4 +196,4 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
             )
         ).alias("metadata"),
     )
-    return assemble_outputs(norm, signals, base.drop("zscore"), cfg)
+    return assemble_outputs(shared, signals, cfg)

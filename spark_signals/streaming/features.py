@@ -267,7 +267,7 @@ def replay_batch(
         if len(mids) > keep:
             mids = mids[-keep:]
         u = math.floor(mid * scale + 0.5000001)
-        if vol_w > 0 and len(us) == vol_w:
+        if len(us) == vol_w:  # EngineConfig guarantees vol_w >= 1
             old = us.pop(0)
             s1 -= old
             s2 -= old * old

@@ -24,6 +24,27 @@ def test_fast_must_be_less_than_slow():
         EngineConfig(sma_fast_window=60, sma_slow_window=60)
 
 
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"volatility_window": 0},
+        {"volatility_window": -5},
+        {"sma_fast_window": 0},
+        {"sma_fast_window": -1, "sma_slow_window": 10},
+        {"sma_fast_window": -3, "sma_slow_window": 0},
+    ],
+)
+def test_windows_must_be_positive(kwargs):
+    # a zero-row volatility window made the streaming window unbounded
+    with pytest.raises(ValueError, match="at least 1"):
+        EngineConfig(**kwargs)
+
+
+def test_smallest_windows_accepted():
+    cfg = EngineConfig(sma_fast_window=1, sma_slow_window=2, volatility_window=1)
+    assert (cfg.sma_fast_window, cfg.sma_slow_window, cfg.volatility_window) == (1, 2, 1)
+
+
 def test_from_env(monkeypatch):
     monkeypatch.setenv("SMA_FAST_WINDOW", "5")
     monkeypatch.setenv("SMA_SLOW_WINDOW", "15")

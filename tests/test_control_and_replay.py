@@ -274,6 +274,152 @@ def test_write_sinks_partitioned_and_retention(spark, tmp_path):
     assert all(d.split("=")[1] >= "2024-01-21" for d in remaining)
 
 
+# ----------------------------------------------------------------- fan-out
+FANOUT_STRATEGIES = ["sma_cross", "ewma_zscore", "breakout"]
+
+
+def _fanout_outputs(spark, strategy):
+    return get_strategy_module(strategy).build_pipeline(load_ticks(spark, SF), EngineConfig())
+
+
+def _plan_leaves(df) -> list[str]:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+@pytest.mark.parametrize("strategy", FANOUT_STRATEGIES)
+def test_fanout_sinks_read_pinned_relation(spark, strategy):
+    """While the shared relation is pinned, every sink plan bottoms out in
+    the InMemoryRelation only: no sink re-scans the parquet source."""
+    from spark_signals.pipeline.builder import persist_for_fanout
+
+    out = persist_for_fanout(_fanout_outputs(spark, strategy))
+    try:
+        for name, df in out.sinks().items():
+            leaves = _plan_leaves(df)
+            assert leaves and set(leaves) == {"InMemoryRelation"}, (name, leaves)
+    finally:
+        out.shared.unpersist()
+    # un-pinned, a fresh build's sinks read the source again
+    fresh = _fanout_outputs(spark, strategy).sinks()
+    assert all("InMemoryRelation" not in _plan_leaves(df) for df in fresh.values())
+
+
+@pytest.mark.parametrize("strategy", ["sma_cross", "breakout"])
+def test_fanout_shared_relation_single_window_stage(spark, strategy):
+    """The pinned relation holds the whole window stage — features,
+    strategy columns, forward-fill and position lag — on one partition and
+    one sort: exactly one Exchange and one Sort."""
+    from tests.test_plans import count_op, plan_str
+
+    p = plan_str(_fanout_outputs(spark, strategy).shared)
+    assert count_op(p, "Exchange") == 1
+    assert count_op(p, "Sort") == 1
+
+
+def _gridded(df):
+    """Doubles on a 1e-10 grid, every other column as is: a double SUM/AVG
+    is summation-order dependent, and the pinned and un-pinned plans feed
+    their aggregates differently partitioned input (a last-ulp difference
+    seen in the hourly AVG of the EWMA run)."""
+    return df.select(
+        *[F.round(c, 10).alias(c) if t == "double" else F.col(c) for c, t in df.dtypes]
+    )
+
+
+@pytest.mark.parametrize("strategy", FANOUT_STRATEGIES)
+def test_write_sinks_matches_unpinned_sinks(spark, tmp_path, strategy):
+    """The concurrent, pinned fan-out writes the rows each sink DataFrame
+    produces on its own, un-pinned plan."""
+    paths = write_sinks(_fanout_outputs(spark, strategy), str(tmp_path / "wh"))
+    want = _fanout_outputs(spark, strategy).sinks()
+    assert set(paths) == set(want)
+    for name, df in want.items():
+        got = _gridded(spark.read.parquet(paths[name]).select(*df.columns))
+        df = _gridded(df)
+        assert got.count() == df.count() > 0, name
+        assert got.exceptAll(df).count() == 0, name
+        assert df.exceptAll(got).count() == 0, name
+
+
+def test_write_sinks_failure_awaits_writes_and_unpersists(spark, tmp_path):
+    """One sink's target is an existing regular file: write_sinks raises,
+    but only after the other five writes finished, and the shared relation
+    is no longer pinned. (Static overwrite would delete whatever sits at the
+    target; dynamic partition overwrite renames partitions into the target
+    directory and so cannot replace a file.)"""
+    root = tmp_path / "wh"
+    root.mkdir()
+    (root / "strategy_metrics").write_text("not a directory")
+    out = _fanout_outputs(spark, "sma_cross")
+    jsc = spark.sparkContext._jsc
+    pinned_before = jsc.getPersistentRDDs().size()
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        with pytest.raises(Exception, match="strategy_metrics"):
+            write_sinks(out, str(root))
+    finally:
+        spark.conf.set(key, prev)
+    assert (root / "strategy_metrics").is_file()
+    # dynamic overwrite moves partitions into place only at job commit
+    for name, df in _fanout_outputs(spark, "sma_cross").sinks().items():
+        if name != "strategy_metrics":
+            assert spark.read.parquet(str(root / name)).count() == df.count() > 0, name
+    level = out.shared.storageLevel
+    assert not (level.useMemory or level.useDisk)
+    assert jsc.getPersistentRDDs().size() == pinned_before
+
+
+def test_write_sinks_jobs_inherit_callers_job_group(spark, tmp_path):
+    """The sink threads carry the caller's local properties, so a job group
+    set around write_sinks covers every job the fan-out runs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = build_pipeline(load_ticks(spark, SF))
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("fanout-group", "fan-out job-group inheritance")
+    try:
+        write_sinks(out, str(tmp_path / "wh"))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(tracker.getJobIdsForGroup("fanout-group")) >= len(out.sinks())
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+# ----------------------------------------------------------------- sources
+def test_directory_table_schema_not_cached(spark, tmp_path):
+    """A Spark-written directory table must not be served a cached schema:
+    rewriting a data file inside it leaves the directory's own mtime and
+    size unchanged, so a directory-keyed cache would go stale."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_signals.io.sources import read_table
+
+    table_dir = tmp_path / "t.parquet"
+    spark.createDataFrame([(1, "a")], "k long, old_col string").coalesce(1).write.parquet(
+        str(table_dir)
+    )
+    # drop the checksum side files now: a stale .crc would fail the re-read
+    for crc in table_dir.glob(".*.crc"):
+        crc.unlink()
+    assert read_table(spark, str(tmp_path), "t").columns == ["k", "old_col"]
+    stat_before = os.stat(table_dir)
+    (part,) = [p for p in table_dir.iterdir() if p.name.endswith(".parquet")]
+    pq.write_table(pa.table({"k": [2], "new_col": [1.5]}), str(part))
+    stat_after = os.stat(table_dir)
+    assert (stat_after.st_mtime_ns, stat_after.st_size) == (
+        stat_before.st_mtime_ns, stat_before.st_size
+    )
+    df = read_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "new_col"]
+    assert [tuple(r) for r in df.collect()] == [(2, 1.5)]
+
+
 # -------------------------------------------------------------------- skew
 def test_salted_join_matches_plain_join(spark):
     from spark_signals.pipeline.skew import salted_join

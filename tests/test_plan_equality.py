@@ -81,10 +81,15 @@ def test_sql_str_lit_escapes_quotes(spark):
     """Interpolated config strings must survive embedded quotes: the bare
     f-string literal the r16 rewrite used raises a parse error (or injects
     SQL) on a value like "o'brien" where the former F.lit handled arbitrary
-    strings (r16 advisory)."""
+    strings (r16 advisory). Spark's default parser also reads backslash
+    escapes, so a trailing backslash, an escaped quote and escape-like
+    sequences must round-trip verbatim too."""
     from spark_signals.rounding import sql_str_lit
 
-    for val in ["plain", "o'brien", "a''b", "'", ""]:
+    for val in [
+        "plain", "o'brien", "a''b", "'", "",
+        "ends\\", "\\", "it\\'s", "back\\slash", "line\\nbreak", "tab\\t", "\\\\",
+    ]:
         got = spark.range(1).selectExpr(f"{sql_str_lit(val)} AS s").first().s
         assert got == val
     # and the quote-free path emits the identical literal text the old
